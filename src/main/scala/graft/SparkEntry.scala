@@ -137,12 +137,12 @@ object SparkEntry {
       val tmp = java.nio.file.Files.createTempDirectory("graft-pr-resume").toString
       val ckpt = Some(graft.engine.CheckpointConfig(
         new graft.ingest.SnapshotStore(tmp), "pr", every = 1))
-      PageRank.run(g, PageRank.Config(0.85, 5), ckpt = ckpt)
-      val pr = PageRank.run(g, PageRank.Config(0.85, PrRounds), ckpt = ckpt)
-      val out = withOid(g, pr.select(col("id"), round(col("rank"), 6).as("pr")), "pr")
-        .localCheckpoint(true)
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
-      out
+      try {
+        PageRank.run(g, PageRank.Config(0.85, 5), ckpt = ckpt)
+        val pr = PageRank.run(g, PageRank.Config(0.85, PrRounds), ckpt = ckpt)
+        withOid(g, pr.select(col("id"), round(col("rank"), 6).as("pr")), "pr")
+          .localCheckpoint(true)
+      } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
     }),
     // weighted PageRank (nx pagerank on the weighted transcript graph:
     // contributions split by edge weight / Σ out-weights)
@@ -165,10 +165,10 @@ object SparkEntry {
       val tmp = java.nio.file.Files.createTempDirectory("graft-wcc-resume").toString
       val ckpt = Some(graft.engine.CheckpointConfig(
         new graft.ingest.SnapshotStore(tmp), "wcc", every = 1))
-      WCC.run(g, maxIter = 5, ckpt = ckpt)
-      val out = WCC.canonical(g, WCC.run(g, ckpt = ckpt)).localCheckpoint(true)
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
-      out
+      try {
+        WCC.run(g, maxIter = 5, ckpt = ckpt)
+        WCC.canonical(g, WCC.run(g, ckpt = ckpt)).localCheckpoint(true)
+      } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
     }),
     "tg_cdlp" -> ((s, dir) => {
       val g = graphFor(s, dir)

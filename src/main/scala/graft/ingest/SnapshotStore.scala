@@ -46,7 +46,9 @@ final case class Manifest(
 final class SnapshotStore(val root: String) {
   implicit private val fmts: Formats = DefaultFormats
 
-  private def conf = new Configuration()
+  // one per store: building a Configuration re-reads the Hadoop XML
+  // resources, which costs more than the filesystem call it serves
+  private lazy val conf = new Configuration()
   private def fs(p: Path): FileSystem = p.getFileSystem(conf)
 
   private def tableDir(table: String) = new Path(root, table)

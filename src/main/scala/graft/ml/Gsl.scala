@@ -88,20 +88,9 @@ object Gsl {
         val cand = frontier.join(oidEdges, Seq("parent"))
         val picked = strategy match {
           case "random" =>
-            cand.select(col("seed"), col("parent"), col("child"),
-                explode(sequence(lit(0), lit(f - 1))).as("slot"))
-              .withColumn("__pick",
-                NeighborSample.pickHash(col("parent"), col("child"), salt, col("slot")))
-              .groupBy(col("seed"), col("parent"), col("slot").as("pos"))
-              .agg(min_by(col("child"), struct(col("__pick"), col("child"))).as("child"))
+            NeighborSample.slotPicks(cand, f, salt).withColumnRenamed("slot", "pos")
           case "topk" | "random_without_replacement" =>
-            val ord =
-              if (strategy == "topk") struct(negate(col("weight")), col("child"))
-              else struct(
-                NeighborSample.pickHash(col("parent"), col("child"), salt, lit(0)),
-                col("child"))
-            graft.engine.Skew.saltedTopK(
-              cand, Seq("seed", "parent"), "child", ord, f, saltFrom = "child")
+            NeighborSample.rankedPicks(cand, f, strategy == "topk", salt)
               .withColumnRenamed("rank", "pos")
           case "full" =>
             cand.select(col("seed"), col("parent"), col("child"), lit(0).as("pos"))

@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   * JVM-internal — no other engine can reproduce the estimate, so the
   * driver's DuckDB oracle could never value-check it. This sketch instead
   * hashes the key with a *portable 30-bit avalanche* (multiply-mask /
-  * xor-shift rounds, [[mix]]) whose every step is exact int64 arithmetic
+  * xor-shift rounds, [[withMix]]) whose every step is exact int64 arithmetic
   * expressible in DuckDB (`&`, `>>`, `xor`): bucket = low 10 bits, rho
   * from the bit length of the high 20 via an integer CASE chain, and the
   * harmonic sum uses only exact powers of two (`1.0 / (1 << reg)`), so
@@ -50,41 +50,65 @@ object Hll {
 
   private val Alpha: Double = 0.7213 / (1.0 + 1.079 / M)
 
-  /** One avalanche pass: three multiply-mask / xor-shift rounds. A
-    * bijection on [0, 2^30) — odd multipliers are invertible mod 2^30
-    * and xor-shift is its own class of bijection — so distinct small
-    * keys stay distinct. All intermediates < 2^62: ANSI-safe.
-    */
-  private def fin(v0: Column): Column = {
-    val a = (v0 * lit(2654435761L)).bitwiseAND(lit(Mask))
-    val b = a.bitwiseXOR(shiftright(a, 15))
-    val c = (b * lit(2246822519L)).bitwiseAND(lit(Mask))
-    val d = c.bitwiseXOR(shiftright(c, 13))
-    val e = (d * lit(3266489917L)).bitwiseAND(lit(Mask))
-    e.bitwiseXOR(shiftright(e, 16))
-  }
+  /** Multiplier and xor-shift of each avalanche round. */
+  private val Rounds = Seq((2654435761L, 15), (2246822519L, 13), (3266489917L, 16))
 
-  /** Portable 30-bit hash of a non-negative long: the high 30 bits are
-    * folded in through one finalizer pass so ids beyond 2^30 (a 100 TB
-    * vertex space) still spread.
+  /** One avalanche pass over long column `c` of `df`, in place: three
+    * multiply-mask / xor-shift rounds. A bijection on [0, 2^30) — odd
+    * multipliers are invertible mod 2^30 and xor-shift is its own class
+    * of bijection — so distinct small keys stay distinct. All
+    * intermediates < 2^62: ANSI-safe.
+    *
+    * Each step is its own projection. The xor-shift reads its input
+    * twice, and a `Column` is a tree, not a DAG: written as one
+    * expression, a pass would copy its input 8 times (and [[withMix]]'s
+    * two nested passes 72 times), which Catalyst then re-walks on every
+    * analyzer and optimizer pass. `CollapseProject` keeps a non-cheap
+    * producer that is referenced twice in its own projection, and
+    * whole-stage codegen still fuses the chain.
     */
-  def mix(id: Column): Column =
-    fin(id.bitwiseAND(lit(Mask))
-      .bitwiseXOR(fin(shiftright(id, 30).bitwiseAND(lit(Mask)))))
+  private def fin(df: DataFrame, c: String): DataFrame =
+    Rounds.foldLeft(df) { case (d, (k, s)) =>
+      d.withColumn(c, (col(c) * k).bitwiseAND(lit(Mask)))
+        .withColumn(c, col(c).bitwiseXOR(shiftright(col(c), s)))
+    }
+
+  /** `df` plus long column `out`: the portable 30-bit hash of the
+    * non-negative long `id` (evaluated once). The high 30 bits are folded
+    * in through one finalizer pass so ids beyond 2^30 (a 100 TB vertex
+    * space) still spread; below 2^30 the fold is 0 and the hash is one
+    * [[fin]] pass.
+    *
+    * `out` leaves through an identity `explode(array(_))`, which fences
+    * the staged chain: the optimizer pushes a predicate on a projected
+    * column (a filter, or the `isnotnull` it infers from a join key)
+    * down through every projection, substituting each definition and so
+    * rebuilding the copied tree; a predicate on a generated column stays
+    * above the Generate.
+    */
+  def withMix(df: DataFrame, id: Column, out: String): DataFrame = {
+    val (h, hi) = (s"${out}__h", s"${out}__hi")
+    val staged = df.withColumn(h, id)
+      .withColumn(hi, shiftright(col(h), 30).bitwiseAND(lit(Mask)))
+    val folded = fin(staged, hi)
+      .withColumn(h, col(h).bitwiseAND(lit(Mask)).bitwiseXOR(col(hi)))
+      .drop(hi)
+    fin(folded, h).withColumn(out, explode(array(col(h)))).drop(h)
+  }
 
   /** Per-bucket max-rho registers for a long key column named `k`. Only
     * buckets that were hit appear (absent bucket = register 0).
     */
   def registers(keys: DataFrame): DataFrame = {
-    val h = mix(col("k"))
-    val w = shiftright(h, P)
+    val w = col("w")
     // bit length of w via an exact integer CASE chain (largest first);
     // w == 0 falls through to 0, giving rho = WBits + 1
     val bitlen = (1 to WBits).foldLeft(lit(0)) { (acc, k) =>
       when(w >= (1L << (k - 1)), lit(k)).otherwise(acc)
     }
-    keys
-      .select(h.bitwiseAND(lit((M - 1).toLong)).as("b"), (lit(WBits + 1) - bitlen).as("r"))
+    withMix(keys.select(col("k")), col("k"), "h")
+      .select(col("h").bitwiseAND(lit((M - 1).toLong)).as("b"), shiftright(col("h"), P).as("w"))
+      .select(col("b"), (lit(WBits + 1) - bitlen).as("r"))
       .groupBy(col("b")).agg(max(col("r")).as("reg"))
   }
 

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.graph.LinkGraph
+import graft.text.TextOps
 
 /** GNN negative sampling — the learning plane's
   * `g.negative_sampler(type, expand_factor, strategy="random")` / GSL
@@ -16,7 +17,7 @@ import graft.graph.LinkGraph
   *
   * Determinism (resume-safe, cross-engine): the reference's random
   * strategy redraws on collision; ours is the bounded deterministic
-  * analog — slot `j` draws candidate ids `Hll.mix(composite) % |V|`
+  * analog — slot `j` draws candidate ids `Hll.withMix(composite) % |V|`
   * for attempts `a = 0..A-1` (the dense id plane IS the draw space, so
   * no candidate indexing pass is needed) and keeps the first attempt
   * that lands on a valid negative. A slot whose whole redraw chain
@@ -27,7 +28,7 @@ import graft.graph.LinkGraph
   * semi-join (candidate membership) + one anti-join (adjacency) on bare
   * ids, and the per-slot pick is a map-side-combined `min` over the
   * attempt index — never a window over an adjacency list and never a
-  * |S|×|candidates| product. The avalanche (`Hll.mix`, one fin pass for
+  * |S|×|candidates| product. The avalanche (`Hll.withMix`, one fin pass for
   * composites < 2^30) is shared bit-for-bit with the DuckDB twin
   * (`SynthSql5.negativeSampleSql`), like `NeighborSample`'s pick hash.
   */
@@ -38,13 +39,27 @@ object NegativeSample {
     */
   def sample(
       g: LinkGraph, seedOids: Seq[String], f: Int, attempts: Int = 8,
-      pickSeed: Long = 42L): DataFrame = {
-    val spark = g.vertices.sparkSession
-    import spark.implicits._
-    val seeds = seedOids.toDF("seed").join(
-      g.vertices.toDF.select(col("oid").as("seed"), col("id").as("seed_id")),
-      Seq("seed"))
-    sampleFrom(g, seeds, f, attempts, NeighborSample.hopSalt(pickSeed, 1))
+      pickSeed: Long = 42L): DataFrame =
+    sampleFrom(g, seedFrame(g, seedOids), f, attempts, NeighborSample.hopSalt(pickSeed, 1))
+
+  /** The bounded rejection draws of a (seed: oid, seed_id) frame:
+    * (seed, seed_id, slot, attempt, `out`), where attempt `a` of slot
+    * `j` draws avalanche(composite) % `range`. The seed's oid hash is
+    * computed once per seed, before the slots and attempts fan out.
+    */
+  private[ml] def draws(
+      seeds: DataFrame, f: Int, attempts: Int, salt: Long, range: Long,
+      out: String): DataFrame = {
+    require(f > 0 && attempts > 0, "fanout and attempts must be positive")
+    val fanned = seeds
+      .select(col("seed"), col("seed_id"), TextOps.portableHash(col("seed")).as("seed_h"))
+      .select(col("*"), explode(sequence(lit(0), lit(f - 1))).as("slot"))
+      .select(col("*"), explode(sequence(lit(0), lit(attempts - 1))).as("attempt"))
+    Hll.withMix(fanned,
+        (col("seed_h") * 31L + lit(salt) + col("slot").cast("long") * 104729L +
+          col("attempt").cast("long") * 15485863L) % TextOps.HashP, out)
+      .select(col("seed"), col("seed_id"), col("slot"), col("attempt"),
+        (col(out) % range).as(out))
   }
 
   /** Frame-based core (the GSL `outNeg()` entry point): `seeds` carries
@@ -54,32 +69,26 @@ object NegativeSample {
   private[ml] def sampleFrom(
       g: LinkGraph, seeds: DataFrame, f: Int, attempts: Int,
       salt: Long): DataFrame = {
-    require(f > 0 && attempts > 0, "fanout and attempts must be positive")
-    val p = graft.text.TextOps.HashP
-    val n = g.numVertices
-    val verts = g.vertices.toDF
-    val draws = seeds
-      .select(col("seed"), col("seed_id"),
-        explode(sequence(lit(0), lit(f - 1))).as("slot"))
-      .select(col("seed"), col("seed_id"), col("slot"),
-        explode(sequence(lit(0), lit(attempts - 1))).as("attempt"))
-      .withColumn("cand_id", Hll.mix(
-        (graft.text.TextOps.portableHash(col("seed")) * 31L + lit(salt) +
-          col("slot").cast("long") * 104729L +
-          col("attempt").cast("long") * 15485863L) % p) % n)
     val candIds = g.edges.toDF.select(col("dst").as("cand_id")).distinct()
+    firstValid(g,
+      draws(seeds, f, attempts, salt, g.numVertices, "cand_id")
+        .join(candIds, Seq("cand_id"), "left_semi"))
+  }
+
+  /** The first surviving attempt per (seed, slot) of `drawn` (seed,
+    * seed_id, slot, attempt, cand_id), rejecting the seed itself and its
+    * out-neighbors, as (seed_oid, slot, neg_oid). Attempts are unique
+    * within a (seed, slot) group, so min is the deterministic pick.
+    */
+  private def firstValid(g: LinkGraph, drawn: DataFrame): DataFrame = {
     val adjacency = g.edges.toDF
       .select(col("src").as("seed_id"), col("dst").as("cand_id"))
-    val kept = draws
-      .where(col("cand_id") =!= col("seed_id"))
-      .join(candIds, Seq("cand_id"), "left_semi")
+    drawn.where(col("cand_id") =!= col("seed_id"))
       .join(adjacency, Seq("seed_id", "cand_id"), "left_anti")
-    // first surviving attempt per slot — attempts are unique within a
-    // (seed, slot) group, so min is the deterministic pick
-    val picked = kept.groupBy(col("seed"), col("slot"))
+      .groupBy(col("seed"), col("slot"))
       .agg(min_by(col("cand_id"), col("attempt")).as("cand_id"))
-    picked
-      .join(verts.select(col("id").as("cand_id"), col("oid").as("neg_oid")), Seq("cand_id"))
+      .join(g.vertices.toDF.select(col("id").as("cand_id"), col("oid").as("neg_oid")),
+        Seq("cand_id"))
       .select(col("seed").as("seed_oid"), col("slot"), col("neg_oid"))
   }
 
@@ -133,7 +142,7 @@ object NegativeSample {
     sampleIntervalFrom(g, seedFrame(g, seedOids), f, attempts,
       NeighborSample.hopSalt(pickSeed, 1), byNodeWeight = true, bucketSize, binW)
 
-  private def seedFrame(g: LinkGraph, seedOids: Seq[String]): DataFrame = {
+  private[ml] def seedFrame(g: LinkGraph, seedOids: Seq[String]): DataFrame = {
     val spark = g.vertices.sparkSession
     import spark.implicits._
     seedOids.toDF("seed").join(
@@ -149,9 +158,7 @@ object NegativeSample {
       g: LinkGraph, seeds: DataFrame, f: Int, attempts: Int, salt: Long,
       byNodeWeight: Boolean,
       bucketSize: Int = 4096, binW: Int = 1024): DataFrame = {
-    require(f > 0 && attempts > 0, "fanout and attempts must be positive")
     require(bucketSize > 0 && binW > 0, "bucketSize and binW must be positive")
-    val p = graft.text.TextOps.HashP
     val edges = g.edges.toDF.select(col("src"), col("dst"), col("weight"))
     // exact integer division on non-negative longs — floor(double) is
     // exact for |E| < 2^53, far past any real edge count
@@ -174,30 +181,13 @@ object NegativeSample {
     val total =
       if (byNodeWeight) edges.agg(sum(col("weight")).cast("long")).head.getLong(0)
       else edges.count()
-    val draws = seeds
-      .select(col("seed"), col("seed_id"),
-        explode(sequence(lit(0), lit(f - 1))).as("slot"))
-      .select(col("seed"), col("seed_id"), col("slot"),
-        explode(sequence(lit(0), lit(attempts - 1))).as("attempt"))
-      .withColumn("u", Hll.mix(
-        (graft.text.TextOps.portableHash(col("seed")) * 31L + lit(salt) +
-          col("slot").cast("long") * 104729L +
-          col("attempt").cast("long") * 15485863L) % p) % total)
     val bins = cum.select(col("cand_id"), col("lo"), col("hi"),
       explode(sequence(idiv(col("lo"), binW.toLong),
         idiv(col("hi") - 1, binW.toLong))).as("bin"))
-    val adjacency = edges
-      .select(col("src").as("seed_id"), col("dst").as("cand_id"))
-    val kept = draws.withColumn("bin", idiv(col("u"), binW.toLong))
-      .join(bins, Seq("bin"))
-      .where(col("u") >= col("lo") && col("u") < col("hi"))
-      .where(col("cand_id") =!= col("seed_id"))
-      .join(adjacency, Seq("seed_id", "cand_id"), "left_anti")
-    val picked = kept.groupBy(col("seed"), col("slot"))
-      .agg(min_by(col("cand_id"), col("attempt")).as("cand_id"))
-    picked
-      .join(g.vertices.toDF.select(col("id").as("cand_id"), col("oid").as("neg_oid")),
-        Seq("cand_id"))
-      .select(col("seed").as("seed_oid"), col("slot"), col("neg_oid"))
+    firstValid(g,
+      draws(seeds, f, attempts, salt, total, "u")
+        .withColumn("bin", idiv(col("u"), binW.toLong))
+        .join(bins, Seq("bin"))
+        .where(col("u") >= col("lo") && col("u") < col("hi")))
   }
 }

@@ -1,11 +1,11 @@
 package graft.ml
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
-import graft.engine.Engine
+import graft.engine.{Engine, Skew}
 import graft.graph.LinkGraph
+import graft.text.TextOps
 
 /** GNN-style k-hop neighbor-fanout sampling — the learning plane's
   * GraphSAGE/GCN mini-batch sampler (the reference's graphlearn
@@ -14,7 +14,7 @@ import graft.graph.LinkGraph
   * fills `f` deterministic child *slots*; slot `j` takes the
   * out-neighbor minimizing an avalanche-mixed pick hash salted by
   * (pickSeed, h, j). The composite (parent, child, salt, slot) value is
-  * passed through [[graft.ml.Hll.mix]] — a linear slot offset alone
+  * passed through [[graft.ml.Hll.withMix]] — a linear slot offset alone
   * preserves the candidate ordering mod p (every slot would pick the
   * same child; the avalanche makes slots genuinely diversify, like a
   * with-replacement draw; two slots may still collide by chance — kept
@@ -36,27 +36,58 @@ object NeighborSample {
   private[ml] def hopSalt(pickSeed: Long, h: Int): Long =
     pickSeed * 1000003L + h * 7919L
 
-  /** The avalanche pick hash for a (parent, child, salt, slot) draw —
-    * composite < p < 2^30, so [[graft.ml.Hll.mix]] degenerates to ONE
-    * fin pass; the SQL twins unroll exactly that chain
-    * (`SynthSql5.neighborSampleSql`).
+  /** `cand` plus `__pick`: the avalanche pick hash of a (parent, child,
+    * salt, slot) draw, built from the oid hashes `parent_h` / `child_h`
+    * that [[oidEdges]] carries. The composite is < p < 2^30, so
+    * [[Hll.withMix]] degenerates to ONE fin pass; the SQL twins unroll
+    * exactly that chain (`SynthSql5.neighborSampleSql`).
     */
-  private[ml] def pickHash(
-      parent: org.apache.spark.sql.Column, child: org.apache.spark.sql.Column,
-      salt: Long, slot: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    graft.ml.Hll.mix(
-      (graft.text.TextOps.portableHash(parent) * 31L +
-        graft.text.TextOps.portableHash(child) * 17L +
-        lit(salt) + slot.cast("long") * 104729L) % graft.text.TextOps.HashP)
+  private def withPick(cand: DataFrame, salt: Long, slot: Column): DataFrame =
+    Hll.withMix(cand,
+      (col("parent_h") * 31L + col("child_h") * 17L + lit(salt) +
+        slot.cast("long") * 104729L) % TextOps.HashP, "__pick")
 
-  /** The oid-keyed adjacency (parent, child, weight), eagerly
-    * checkpointed — the shared hop input for every sampler family.
+  /** With-replacement slot picks over a (seed, parent, child, parent_h,
+    * child_h) candidate frame: each of the `f` slots of a (seed, parent)
+    * takes the child minimizing the pick hash; ties on the raw hash
+    * break to the lexicographically smaller child (same portable tie
+    * rule as samplingStep / its row_number twin). Returns (seed, parent,
+    * slot, child).
     */
-  private[ml] def oidEdges(g: LinkGraph): DataFrame = g.edges.toDF
-    .join(g.vertices.toDF.select(col("id").as("src"), col("oid").as("parent")), "src")
-    .join(g.vertices.toDF.select(col("id").as("dst"), col("oid").as("child")), "dst")
-    .select(col("parent"), col("child"), col("weight"))
-    .localCheckpoint(true)
+  private[ml] def slotPicks(cand: DataFrame, f: Int, salt: Long): DataFrame =
+    withPick(cand.select(col("seed"), col("parent"), col("child"),
+        col("parent_h"), col("child_h"),
+        explode(sequence(lit(0), lit(f - 1))).as("slot")), salt, col("slot"))
+      .groupBy(col("seed"), col("parent"), col("slot"))
+      .agg(min_by(col("child"), struct(col("__pick"), col("child"))).as("child"))
+
+  /** Per (seed, parent) the first `f` children of a candidate frame by
+    * edge weight (desc) or, when `byWeight` is false, by the slot-0 pick
+    * hash; ties break to the smaller child oid. Returns (seed, parent,
+    * rank, child), rank 0-based.
+    */
+  private[ml] def rankedPicks(
+      cand: DataFrame, f: Int, byWeight: Boolean, salt: Long): DataFrame = {
+    val (ranked, ord) =
+      if (byWeight) (cand, struct(negate(col("weight")), col("child")))
+      else (withPick(cand, salt, lit(0)), struct(col("__pick"), col("child")))
+    Skew.saltedTopK(ranked, Seq("seed", "parent"), "child", ord, f, saltFrom = "child")
+  }
+
+  /** The oid-keyed adjacency (parent, child, weight, parent_h, child_h),
+    * eagerly checkpointed — the shared hop input for every sampler
+    * family. `parent_h` / `child_h` are the endpoints' portable oid
+    * hashes, computed once per vertex rather than once per draw.
+    */
+  private[graft] def oidEdges(g: LinkGraph): DataFrame = {
+    val hashed = g.vertices.toDF
+      .select(col("id"), col("oid"), TextOps.portableHash(col("oid")).as("h"))
+    g.edges.toDF
+      .join(hashed.select(col("id").as("src"), col("oid").as("parent"), col("h").as("parent_h")), "src")
+      .join(hashed.select(col("id").as("dst"), col("oid").as("child"), col("h").as("child_h")), "dst")
+      .select(col("parent"), col("child"), col("weight"), col("parent_h"), col("child_h"))
+      .localCheckpoint(true)
+  }
 
   /** Returns (seed_oid, hop, parent_oid, child_oid, slot) — hop is
     * 1-based; dead-end parents simply contribute no rows.
@@ -66,20 +97,11 @@ object NeighborSample {
       pickSeed: Long = 42L): DataFrame = {
     val spark = g.vertices.sparkSession
     import spark.implicits._
-    val oidEdges = this.oidEdges(g).select("parent", "child")
+    val oidEdges = this.oidEdges(g)
     var frontier = seedOids.toDF("seed").select(col("seed"), col("seed").as("parent"))
     val hops = fanouts.zipWithIndex.map { case (f, h) =>
-      val salt = hopSalt(pickSeed, h)
-      val cand = frontier.join(oidEdges, Seq("parent"))
-        .select(col("seed"), col("parent"), col("child"),
-          explode(sequence(lit(0), lit(f - 1))).as("slot"))
-        .withColumn("__pick", pickHash(col("parent"), col("child"), salt, col("slot")))
-      // deterministic argmin per slot; ties on the raw hash break to the
-      // lexicographically smaller child (same portable tie rule as
-      // samplingStep / its row_number twin)
       val picked = Engine.materialize(
-        cand.groupBy(col("seed"), col("parent"), col("slot"))
-          .agg(min_by(col("child"), struct(col("__pick"), col("child"))).as("child")))
+        slotPicks(frontier.join(oidEdges, Seq("parent")), f, hopSalt(pickSeed, h)))
       frontier = picked.select(col("seed"), col("child").as("parent")).distinct()
       picked.select(col("seed").as("seed_oid"), lit(h + 1).as("hop"),
         col("parent").as("parent_oid"), col("child").as("child_oid"), col("slot"))
@@ -113,7 +135,7 @@ object NeighborSample {
     sampleRanked(g, seedOids, fanouts, byWeight = false, pickSeed)
 
   /** Shared ranked-selection sampler. Scale shape: the per-(seed,
-    * parent) top-k is [[graft.engine.Skew.saltedTopK]] — two-phase
+    * parent) top-k is [[Skew.saltedTopK]] — two-phase
     * salted truncation, never a window over a hub parent's adjacency.
     * Returns (seed_oid, hop, parent_oid, child_oid, rank), rank 0-based.
     */
@@ -125,13 +147,8 @@ object NeighborSample {
     val oidEdges = this.oidEdges(g)
     var frontier = seedOids.toDF("seed").select(col("seed"), col("seed").as("parent"))
     val hops = fanouts.zipWithIndex.map { case (f, h) =>
-      val salt = hopSalt(pickSeed, h)
-      val cand = frontier.join(oidEdges, Seq("parent"))
-      val ord =
-        if (byWeight) struct(negate(col("weight")), col("child"))
-        else struct(pickHash(col("parent"), col("child"), salt, lit(0)), col("child"))
-      val picked = Engine.materialize(graft.engine.Skew.saltedTopK(
-        cand, Seq("seed", "parent"), "child", ord, f, saltFrom = "child"))
+      val picked = Engine.materialize(rankedPicks(
+        frontier.join(oidEdges, Seq("parent")), f, byWeight, hopSalt(pickSeed, h)))
       frontier = picked.select(col("seed"), col("child").as("parent")).distinct()
       picked.select(col("seed").as("seed_oid"), lit(h + 1).as("hop"),
         col("parent").as("parent_oid"), col("child").as("child_oid"), col("rank"))
@@ -188,7 +205,7 @@ object NeighborSample {
     * — never an inequality join against the whole adjacency. Intervals
     * are built once per DISTINCT parent and re-joined to (seed, parent)
     * pairs, so a parent shared by many seeds lays out once. Draws are
-    * seed-independent (per parent), matching [[pickHash]]'s convention.
+    * seed-independent (per parent), matching [[withPick]]'s convention.
     *
     * Returns (seed_oid, hop, parent_oid, child_oid, slot) — hop
     * 1-based; parents with zero total weight contribute no rows.
@@ -227,19 +244,18 @@ object NeighborSample {
     require(f > 0 && subBuckets > 0 && binW > 0,
       "fanout, subBuckets and binW must be positive")
     import org.apache.spark.sql.expressions.Window
-    val p = graft.text.TextOps.HashP
-    def idiv(c: org.apache.spark.sql.Column, d: Long): org.apache.spark.sql.Column =
-      floor(c / d).cast("long")
+    val p = TextOps.HashP
+    def idiv(c: Column, d: Long): Column = floor(c / d).cast("long")
     val adjRaw = parents.join(oidEdges, Seq("parent"))
     val adj =
       if (byInDegree) {
         // global in-degree (rows of the aggregated edge table =
         // distinct in-neighbors) as the child's weight
         val indeg = oidEdges.groupBy(col("child")).agg(count(lit(1)).as("w"))
-        adjRaw.select(col("parent"), col("child")).distinct()
-          .join(indeg, Seq("child"))
+        adjRaw.select(col("parent"), col("parent_h"), col("child"), col("child_h"))
+          .distinct().join(indeg, Seq("child"))
       } else
-        adjRaw.groupBy(col("parent"), col("child"))
+        adjRaw.groupBy(col("parent"), col("parent_h"), col("child"), col("child_h"))
           .agg(sum(col("weight")).cast("long").as("w"))
     // RANGE-bucket the child hash (sub = hash div ceil(p/S)) so that
     // (sub asc, hash asc) IS the global (hash, child) order: the layout
@@ -248,23 +264,21 @@ object NeighborSample {
     // bucket count into the semantics)
     val bsize = (p + subBuckets - 1) / subBuckets
     val a2 = adj.where(col("w") > 0)
-      .withColumn("ph", graft.text.TextOps.portableHash(col("child")))
-      .withColumn("sub", idiv(col("ph"), bsize))
-    val st = a2.groupBy(col("parent"), col("sub")).agg(sum(col("w")).as("bt"))
+      .withColumn("sub", idiv(col("child_h"), bsize))
+    val st = a2.groupBy(col("parent"), col("parent_h"), col("sub")).agg(sum(col("w")).as("bt"))
     val offs = st.withColumn("boff",
       sum(col("bt")).over(Window.partitionBy(col("parent")).orderBy(col("sub"))) - col("bt"))
       .select(col("parent"), col("sub"), col("boff"))
-    val wIn = Window.partitionBy(col("parent"), col("sub")).orderBy(col("ph"), col("child"))
+    val wIn = Window.partitionBy(col("parent"), col("sub")).orderBy(col("child_h"), col("child"))
     val cum = a2.join(offs, Seq("parent", "sub"))
       .withColumn("lo", col("boff") + sum(col("w")).over(wIn) - col("w"))
       .select(col("parent"), col("child"), col("lo"), (col("lo") + col("w")).as("hi"))
-    val tot = st.groupBy(col("parent")).agg(sum(col("bt")).as("tw"))
-    val draws = tot
-      .select(col("parent"), col("tw"),
-        explode(sequence(lit(0), lit(f - 1))).as("slot"))
-      .withColumn("u", Hll.mix(
-        (graft.text.TextOps.portableHash(col("parent")) * 31L + lit(salt) +
-          col("slot").cast("long") * 104729L) % p) % col("tw"))
+    val tot = st.groupBy(col("parent"), col("parent_h")).agg(sum(col("bt")).as("tw"))
+    val draws = Hll.withMix(
+        tot.select(col("parent"), col("parent_h"), col("tw"),
+          explode(sequence(lit(0), lit(f - 1))).as("slot")),
+        (col("parent_h") * 31L + lit(salt) + col("slot").cast("long") * 104729L) % p, "u")
+      .withColumn("u", col("u") % col("tw"))
     val bins = cum.select(col("parent"), col("child"), col("lo"), col("hi"),
       explode(sequence(idiv(col("lo"), binW.toLong),
         idiv(col("hi") - 1, binW.toLong))).as("bin"))

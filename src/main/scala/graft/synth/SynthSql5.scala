@@ -561,7 +561,7 @@ object SynthSql5 {
     * the pick-hash argmin over the out-adjacency (row_number twin of the
     * Spark side's map-side-combined min_by; ties pick, then child). The
     * composite pick value goes through ONE `Hll.fin` avalanche pass,
-    * staged as chained CTEs — identical to the Spark side's `Hll.mix`
+    * staged as chained CTEs — identical to the Spark side's `Hll.withMix`
     * because the composite is < HashP < 2^30 (the high-bits fold is a
     * no-op). Without the avalanche a linear slot offset preserves the
     * candidate ordering mod p and every slot picks the same child.

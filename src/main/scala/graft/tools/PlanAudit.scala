@@ -276,11 +276,7 @@ object PlanAudit {
     {
       val gm = SparkEntry.graphFor(spark, sfDir)
       import spark.implicits._
-      val oidE = gm.edges.toDF
-        .join(gm.vertices.toDF.select(col("id").as("src"), col("oid").as("parent")), "src")
-        .join(gm.vertices.toDF.select(col("id").as("dst"), col("oid").as("child")), "dst")
-        .select(col("parent"), col("child"), col("weight"))
-        .localCheckpoint(true)
+      val oidE = graft.ml.NeighborSample.oidEdges(gm)
       val parents = Seq("system", "assistant").toDF("parent")
       val plan = graft.ml.NeighborSample.proportionalPicks(
         oidE, parents, 3, 42L, byInDegree = false)
